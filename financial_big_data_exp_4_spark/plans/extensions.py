@@ -916,7 +916,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col(s), F.lit(0)).alias(f"cnt_{s.lower()}")
             for s in ("F", "O", "P")
         ],
-    ).orderBy("o_orderpriority")
+    ).coalesce(1).orderBy("o_orderpriority")
 
 
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1950,6 +1950,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("n_name")
         .agg(F.sum(rev).cast("double").alias("revenue"))
+        .coalesce(1)
         .orderBy(F.desc("revenue"), F.asc("n_name"))
     )
 

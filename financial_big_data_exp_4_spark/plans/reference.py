@@ -55,13 +55,14 @@ def q_industry_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One logical plan replaces the reference's two chained MR jobs: Spark's
     hash aggregate does map-side partial aggregation (the reference's MR
-    job configures no combiner), and the sort is a range-partitioned
-    exchange over the ~|groups| aggregated rows, not the input.
+    job configures no combiner), and the ~|groups| aggregated rows are
+    sorted in one task — no range exchange, no sampling job.
     """
     customer = load_table(spark, sf_dir, "customer")
     return (
         customer.groupBy("c_mktsegment")
         .agg(F.count("*").alias("cnt"))
+        .coalesce(1)
         .orderBy(F.desc("cnt"), F.asc("c_mktsegment"))
     )
 
@@ -90,6 +91,7 @@ def q_loan_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_edge",
             "cnt",
         )
+        .coalesce(1)
         .orderBy("left_edge")
     )
 
@@ -108,7 +110,8 @@ def q_employer_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-used ``counts`` frame, both plan a second full scan: Spark shares
     no subtrees between plan branches.) The reference instead summed
     ``lit(1/300000)`` per row (fp drift, SURVEY note B); count/total is
-    exact and partitioning-invariant.
+    exact and partitioning-invariant. The grouped rows are coalesced to
+    one task, so neither the window nor the sort adds an exchange.
     """
     from pyspark.sql import Window
 
@@ -116,7 +119,8 @@ def q_employer_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = orders.groupBy("o_orderpriority").agg(F.count("*").alias("cnt"))
     total = F.sum("cnt").over(Window.partitionBy())
     return (
-        counts.select(
+        counts.coalesce(1)
+        .select(
             "o_orderpriority",
             share_expr(F.col("cnt"), total.cast("long"), 4).alias("share"),
         )
@@ -303,20 +307,17 @@ def q_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_memo,
     )
 
-    # fan the percentile's partial buffers (and the bucket-count partial
-    # aggregate below) across cores — the single-file fixture scan is one
-    # row group, i.e. one task (no-op at real split counts)
-    orders = rebalance_for_cpu(
-        load_table(spark, sf_dir, "orders"), "o_orderkey"
-    )
+    orders = load_table(spark, sf_dir, "orders")
     # the fitted splits are a model artifact (exactly what a fitted
     # QuantileDiscretizer/Bucketizer persists) — memoized per
     # (session, sf_dir) like the k-means quantizer fit
     memo = session_memo(spark, "_fbde4_quantile_splits")
     splits = memo.get(sf_dir) if memo is not None else None
     if splits is None:
+        # fan the percentile's partial buffers across cores — the
+        # single-file fixture scan is one row group, i.e. one task
         ps = ", ".join(repr(p) for p in QUANTILE_PS)
-        qs = orders.agg(
+        qs = rebalance_for_cpu(orders, "o_orderkey").agg(
             F.expr(f"percentile(o_totalprice, array({ps}))").alias("qs")
         ).head()["qs"]
         # dedupe: Bucketizer REJECTS non-strictly-increasing splits, and
@@ -335,6 +336,7 @@ def q_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketizer.transform(orders)
         .groupBy(F.col("price_bucket").cast("int").alias("price_bucket"))
         .agg(F.count("*").alias("cnt"))
+        .coalesce(1)
         .orderBy("price_bucket")
     )
 
@@ -349,7 +351,10 @@ def q_vector_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-``na.fill`` columns, nb4 cell 7): the assembler's
     ``handleInvalid="error"`` default aborts on NULL, and ``"keep"``
     would smuggle NaN into the vector — imputation is the total,
-    reference-faithful semantics (COALESCE(−1.0) in the oracle)."""
+    reference-faithful semantics (COALESCE(−1.0) in the oracle).
+
+    No ORDER BY: the result is per-row (like :func:`q_interest`), so the
+    plan stays map-only."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.functions import vector_to_array
 
@@ -366,7 +371,7 @@ def q_vector_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         arr[0].alias("f_custkey"),
         arr[1].alias("f_nationkey"),
         arr[2].alias("f_acctbal"),
-    ).orderBy("c_custkey")
+    )
 
 
 def q_random_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,6 +385,7 @@ def q_random_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.select(train_test_split_col(F.col("o_orderkey")).alias("split"))
         .groupBy("split")
         .agg(F.count("*").alias("cnt"))
+        .coalesce(1)
         .orderBy("split")
     )
 
@@ -457,6 +463,7 @@ def q_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long")
             ).alias("sum_acctbal_cents"),
         )
+        .coalesce(1)
         .orderBy("split")
     )
 

@@ -45,13 +45,44 @@ def test_map_only_queries_have_no_exchange(spark, sf_dir):
     from financial_big_data_exp_4_spark.plans.reference import (
         q_interest,
         q_project,
+        q_vector_assemble,
         q_workyear_filter,
     )
 
-    for q in (q_interest, q_project, q_workyear_filter):
+    for q in (q_interest, q_project, q_vector_assemble, q_workyear_filter):
         plan = _physical_plan(q(spark, sf_dir))
         assert "Exchange" not in plan, f"{q.__name__} shuffles:\n{plan}"
         assert "Sort" not in plan, f"{q.__name__} sorts:\n{plan}"
+
+
+#: Queries whose total order is over a result sized by a small key domain,
+#: with each sort key as (column, descending).
+BOUNDED_ORDER_KEYS = {
+    "q_industry_count": [("cnt", True), ("c_mktsegment", False)],
+    "q_loan_histogram": [("left_edge", False)],
+    "q_employer_share": [("share", False), ("o_orderpriority", False)],
+    "q_quantile_bucket": [("price_bucket", False)],
+    "q_random_split": [("split", False)],
+    "q_feature_pipeline": [("split", False)],
+    "q_pivot": [("o_orderpriority", False)],
+    "q_local_supplier_volume": [("revenue", True), ("n_name", False)],
+}
+
+
+def test_bounded_order_queries_sort_in_one_task(spark, sf_dir):
+    """A small ordered result sorts in one partition: no range exchange
+    (whose sampler fires its own job), and rows come back in order."""
+    from financial_big_data_exp_4_spark.plans import REFERENCE_QUERIES
+
+    for name, keys in BOUNDED_ORDER_KEYS.items():
+        df = REFERENCE_QUERIES[name](spark, sf_dir)
+        plan = _physical_plan(df)
+        assert "rangepartitioning" not in plan, f"{name} range-shuffles:\n{plan}"
+        rows = df.collect()
+        expected = rows
+        for col, desc in reversed(keys):  # stable sort, minor key first
+            expected = sorted(expected, key=lambda r: r[col], reverse=desc)
+        assert rows == expected, name
 
 
 def test_topk_plans_as_take_ordered(spark, sf_dir):

@@ -4,6 +4,7 @@ checks the scale-relevant properties the engine promises:
 * no ``BatchEvalPython`` (Python row UDFs) anywhere except the declared
   ``mapInPandas`` boundary (ArrowEvalPython / MapInPandas);
 * per-row ("map-only") queries contain no Exchange/Sort;
+* small ordered results sort in one task, not through a range exchange;
 * star-join dims are BroadcastHashJoin;
 * projections prune columns at the FileScan (ReadSchema);
 * top-k plans as TakeOrderedAndProject.
@@ -26,6 +27,20 @@ MAP_ONLY = {
     "q_fillna",
     "q_hash_sample",
     "q_stratified_sample",
+    "q_vector_assemble",
+}
+
+#: total orders over a result sized by a small key domain: coalesced to one
+#: partition before the sort, so no range exchange (and its sampling job)
+BOUNDED_ORDER = {
+    "q_industry_count",
+    "q_loan_histogram",
+    "q_employer_share",
+    "q_quantile_bucket",
+    "q_random_split",
+    "q_feature_pipeline",
+    "q_pivot",
+    "q_local_supplier_volume",
 }
 
 #: map-only except for the scale-up-only CPU rebalance
@@ -204,6 +219,8 @@ def main() -> int:
                 problems.append("unexpected Exchange in map-only query")
             if "Sort" in plan:
                 problems.append("unexpected Sort in map-only query")
+        if name in BOUNDED_ORDER and "Exchange rangepartitioning" in plan:
+            problems.append("small ordered result range-shuffled")
         if name in MAP_REBALANCED:
             if plan.count("Exchange") > 1:
                 problems.append("more than the one rebalance Exchange")
